@@ -165,7 +165,7 @@ object GraftFunctions {
         .createOrReplaceTempFunction(name, builder, "built-in")
     }
 
-  /** Post-`getOrCreate` belt for the protocol mains (Verify/Bench):
+  /** Post-`getOrCreate` belt for [[Sessions.local]]:
     * `.config("spark.sql.extensions", ...)` only takes effect when the
     * session is actually CREATED — in a shared JVM, getOrCreate reuses
     * the existing session and the injection is silently skipped, which

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -20,37 +20,18 @@ import graft.streaming.{ChangeStreamRelay, LatestStateProcessor}
 object RelayBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Sessions.local(s"local[$cpus]", cpus)
 
     val src = Files.createTempDirectory("relaybench_src").toString
     val out = Files.createTempDirectory("relaybench_out").toString
     val chk = Files.createTempDirectory("relaybench_chk").toString
 
     // synthesize the change-stream wire format from the events fixture
-    // (same mapping as SparkEntry.entry; error → invalidate dead-letters)
-    import graft.functions.ExtJson.ext_json_canonical
+    // (the SparkEntry.entry envelope; error → invalidate dead-letters)
     val events = Tables.table(spark, sfDir, "events")
     val n = events.count()
-    events.select(to_json(struct(
-        col("event_id").cast("string").as("_id"),
-        when(col("event_type") === "signup", "insert")
-          .when(col("event_type") === "purchase", "update")
-          .when(col("event_type") === "click", "replace")
-          .when(col("event_type") === "view", "update")
-          .otherwise("invalidate").as("operationType"),
-        ext_json_canonical(col("ts")).as("clusterTime"),
-        struct(lit("app").as("db"), col("event_type").as("coll")).as("ns"),
-        ext_json_canonical(struct(col("user_id").as("_id"))).as("documentKey"),
-        ext_json_canonical(struct(
-          col("event_id"), col("user_id"), col("value"), col("props"))).as("fullDocument")))
-        .as("value"))
+    SparkEntry.envelope(events).select(to_json(struct(col("*"))).as("value"))
       .write.mode("overwrite").text(src)
 
     val t0 = System.nanoTime()

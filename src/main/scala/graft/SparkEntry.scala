@@ -22,10 +22,16 @@ object SparkEntry {
     * the `events` fixture, then run [[ChangeEvents.relay]]: op filter →
     * topic routing → Connect key envelope → ExtJSON value.
     */
-  def entry(spark: SparkSession): DataFrame = {
-    val dir = "/root/testdata/sf0.001"
-    val events = Tables.table(spark, dir, "events")
-    val envelope = events.select(
+  def entry(spark: SparkSession): DataFrame =
+    ChangeEvents.relay(envelope(Tables.table(spark, "/root/testdata/sf0.001", "events")))
+
+  /** The `events` fixture as a change-stream envelope, in
+    * [[ChangeEvents.envelopeSchema]] column order. `to_json` of its
+    * columns is the file wire format [[graft.streaming.ChangeStreamRelay]]
+    * reads (the null `updateDescription` is omitted from the JSON).
+    */
+  def envelope(events: DataFrame): DataFrame =
+    events.select(
       col("event_id").cast("string").as("_id"),
       // error plays the invalidate role: relay must dead-letter it (§2.2)
       when(col("event_type") === "signup", "insert")
@@ -39,8 +45,6 @@ object SparkEntry {
       ext_json_canonical(struct(
         col("event_id"), col("user_id"), col("value"), col("props"))).as("fullDocument"),
       lit(null).cast("string").as("updateDescription"))
-    ChangeEvents.relay(envelope)
-  }
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

@@ -2,13 +2,16 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.streaming.StreamingDedup
 
-/** RocksDB state-store growth measurement (verdict-r15 #3): every batch
+/** Kept: the only measurement of RocksDB state growth — perfbench has no
+  * ingest or state workload.
+  *
+  * RocksDB state-store growth measurement (verdict-r15 #3): every batch
   * operator has a decade leg, but the streaming state stores had TTL
   * CONTRACTS with no measured size/throughput curve — and the 100 TB
   * streaming risk is state, not events/s. Two curves over the
@@ -54,16 +57,10 @@ import graft.streaming.StreamingDedup
   */
 object StateBench {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Sessions.local(s"local[$cpus]", cpus)
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import spark.implicits._
 
     val cards = sys.env.getOrElse("SPARK_GRAFT_STATE_KEYS",

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,21 +10,8 @@ object Verify {
     val outDir = args(1)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the SQL front door rides the protocol run: injection failures
-      // (a renamed class, a builder that stopped resolving) fail the
-      // round loudly instead of rotting between SqlSurfaceSpec runs
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // shared-JVM belt: builder config is skipped when getOrCreate reuses
-    // a session — attach + assert so the loud-failure goal always holds
-    GraftFunctions.ensureAttached(spark)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Sessions.local(s"local[$cpus]", cpus)
     new java.io.File(outDir).mkdirs()
     // A typo'd name in `only` would otherwise be silently dropped by the
     // filters below — an empty dump that reads as "nothing to do".

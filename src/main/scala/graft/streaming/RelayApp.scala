@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-
 /** Runnable relay with the reference's exact configuration surface
   * (env vars + defaults, /root/reference/main.go:28-79):
   *
@@ -65,14 +63,8 @@ object RelayApp {
 
   def main(args: Array[String]): Unit = {
     val cfg = RelayConfig.fromEnv()
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(sys.env.getOrElse("SPARK_MASTER", "local[4]"),
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     val srcDir = cfg.sourceDir.getOrElse(
       sys.error("SOURCE_DIR must point at a change-event JSON directory " +
         "(connector-free local mode; Mongo connector jar not on classpath)"))

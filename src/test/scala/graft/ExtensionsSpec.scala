@@ -7,6 +7,16 @@ import graft.operators.Skew
 /** The SQL surface of the native expressions and the skew utilities. */
 class ExtensionsSpec extends SparkSpec {
 
+  test("the suite session carries the Sessions policy: UTC, no UI, registry attached") {
+    assert(spark.conf.get("spark.sql.session.timeZone") === "UTC")
+    assert(spark.sparkContext.uiWebUrl.isEmpty)
+    // no registerAll in this case: Sessions.local attached the registry
+    val r = spark.sql("SELECT md5_bucket('abc', 10) AS b").head()
+    val expectBucket = java.lang.Long.parseLong(
+      org.apache.commons.codec.digest.DigestUtils.md5Hex("abc").take(8), 16) % 10L
+    assert(r.getLong(0) === expectBucket)
+  }
+
   test("native expressions callable from SQL after registration") {
     GraftFunctions.registerAll(spark)
     val r = spark.sql(

@@ -104,6 +104,24 @@ class RelayStreamingSpec extends SparkSpec {
     assert(second.filter(col("value").contains("\"_id\":\"4\"")).count() === 1)
   }
 
+  test("JSON wire format of the events envelope relays exactly like the batch entry") {
+    val src = Files.createTempDirectory("wire_src").toString
+    val out = Files.createTempDirectory("wire_out").toString
+    val chk = Files.createTempDirectory("wire_chk").toString
+    // the wire format RelayBench writes (perfbench relay_live writes the same shape)
+    SparkEntry.envelope(Tables.table(spark, sfDir, "events"))
+      .select(to_json(struct(col("*"))).as("value"))
+      .write.mode("overwrite").text(src)
+    ChangeStreamRelay.run(spark, src, out, chk).awaitTermination()
+
+    def triples(df: org.apache.spark.sql.DataFrame): Seq[(String, String, String)] =
+      df.select("topic", "key", "value").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2))).toSeq.sorted
+    val batch = triples(SparkEntry.entry(spark))
+    assert(batch.size === 799)
+    assert(triples(spark.read.parquet(out)) === batch)
+  }
+
   test("crash-resume: a query killed mid-source restarts with no loss and no dupes") {
     import org.apache.spark.sql.streaming.Trigger
     val src = Files.createTempDirectory("crash_src").toString

@@ -5,13 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local SparkSession per suite. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local("local[4]", 4)
 
   lazy val sfDir = "/root/testdata/sf0.001"
 
